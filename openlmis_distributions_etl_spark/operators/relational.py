@@ -1226,7 +1226,7 @@ def order_gap_median_by_segment(t: dict[str, DataFrame]) -> DataFrame:
     buckets, no per-segment global sort). Gaps are exact integer
     days; the mean divides two exact integers once."""
     from ..functions.cache import retain
-    from ..operators.analytics import _grouped_rank_min
+    from ..functions.prefix import _grouped_rank_min
 
     w = Window.partitionBy("o_custkey").orderBy(
         F.asc("o_orderdate"), F.asc("o_orderkey"))

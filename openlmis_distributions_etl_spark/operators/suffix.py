@@ -24,7 +24,7 @@ as DataFrame rounds:
   same window shuffle.
 
 Rank assignment is the repo's distributed prefix decomposition
-(`_rank_buckets`, analytics.py): range-bucket a double proxy of the
+(`rank_buckets`, functions/prefix.py): range-bucket a double proxy of the
 sort key data-proportionally (equal keys never straddle), dense_rank
 inside bounded buckets, and offset by the per-bucket exclusive
 count-distinct prefix over the tiny bucket frame. NO global
@@ -68,7 +68,7 @@ from pyspark.sql.types import (LongType, StringType, StructField,
                                StructType)
 
 from ..functions.cache import retain
-from .analytics import _rank_buckets_probed
+from ..functions.prefix import rank_buckets
 from .dedup import _all_docs_tokenized, _truncate_lineage
 
 LRS_SCHEMA = StructType([
@@ -163,9 +163,7 @@ def _dense_rank_distributed(df: DataFrame, n: int, okey: list,
     if dense_max is not None:
         b = _doubling_buckets(df, n, dense_max, heavy)
     else:
-        # fused probe: count + fence sketch in ONE collect (the
-        # caller no longer pays a separate count job for sizing)
-        b, _ = _rank_buckets_probed(df.withColumn("_k", proxy))
+        b = rank_buckets(df.withColumn("_k", proxy))
     win = Window.partitionBy("bkt").orderBy(*okey)
     per = b.groupBy("bkt").agg(F.count_distinct(*okey).alias("_nd"))
     wo = (Window.orderBy(F.asc("bkt"))

@@ -682,7 +682,8 @@ def peak_concurrent_sessions(t: dict[str, DataFrame]) -> DataFrame:
     starting at another's end+1 is not concurrent with it) — the
     (us asc, delta asc) sort key, identical in the oracle. The in-day window partitions on the calendar day;
     at extreme per-day volumes the same fence decomposition as
-    `_rank_buckets` applies (documented, not needed at gate scale)."""
+    `functions.prefix.rank_buckets` applies (documented, not needed at
+    gate scale)."""
     sess = (sessionize_events(t)
             .groupBy("user_id", "session_id")
             .agg(F.min("ts_us").alias("start_us"),
@@ -737,7 +738,7 @@ def funnel_convert_time_quantiles(t: dict[str, DataFrame]) -> DataFrame:
     exactly the 100 TB case a single global sort would lose).
     Conversion time is exact integer microseconds floored to whole
     seconds before selection."""
-    from ..operators.analytics import _grouped_rank_min
+    from ..functions.prefix import _grouped_rank_min
     conv = (funnel_signup_purchase(t)
             .where(F.col("converted") == 1)
             .select(F.expr("(first_purchase_after_us"

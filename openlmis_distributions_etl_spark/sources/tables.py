@@ -51,9 +51,6 @@ BROADCAST_DIMS = frozenset({"region", "nation", "supplier", "part", "customer"})
 # whatever it finds instead of hard-coding one historical layout.
 TS_COLS = {"events": ("ts",)}
 
-# Kept for backward import compatibility (streaming probes this map).
-NANOS_TS = TS_COLS
-
 # Columns every provider layout must supply (names only — physical
 # types are normalized or validated separately; widths are allowed to
 # vary so a re-provision can't hard-fail the whole engine over an

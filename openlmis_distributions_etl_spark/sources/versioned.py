@@ -54,13 +54,6 @@ def _read_manifest(path: str, version: int) -> dict:
         return json.load(f)
 
 
-def committed_txns(path: str) -> set[str]:
-    """Transaction ids recorded across all manifests (the streaming
-    exactly-once ledger)."""
-    return {m["txn"] for v in versions(path)
-            if (m := _read_manifest(path, v)).get("txn")}
-
-
 def write_versioned(df: DataFrame, path: str, mode: str = "append",
                     base_version: int | None = None,
                     txn: str | None = None) -> int:

@@ -1117,18 +1117,44 @@ def test_select_kth_above_finish_threshold_with_min_ties(spark):
     sample.unpersist()
 
 
+def _spy_collect_fences(monkeypatch, P):
+    """Record the fence count of every extra sketch job rank_buckets
+    collects: none on the probe branch, nb on the exact-resolution
+    branch, the coarse level's count on the two-level branch."""
+    calls = []
+    real = P._collect_fences
+
+    def spy(df, m):
+        calls.append(m)
+        return real(df, m)
+    monkeypatch.setattr(P, "_collect_fences", spy)
+    return calls
+
+
+# (PROBE_FENCES, PREFIX_MAX_FENCES) driving each rank_buckets branch
+# once the target row count sizes nb past 8 buckets
+_BUCKET_BRANCHES = ((64, 1024, "probe"), (8, 1024, "exact"),
+                    (8, 5, "two-level"))
+
+
 def test_rank_buckets_data_proportional_and_two_level(spark, monkeypatch):
     """The prefix-sum bucket count must GROW with input (the round-4
     fixed 16-bucket ceiling capped window parallelism at scale), ties
-    must never straddle buckets, and the two-level recursion past
-    PREFIX_MAX_FENCES must produce the same monotone bucketing."""
-    from openlmis_distributions_etl_spark.operators import analytics as A
+    must never straddle buckets, and every branch of the bucketer —
+    the single probe, the exact-resolution sketch and the two-level
+    recursion past PREFIX_MAX_FENCES — must produce the same monotone
+    bucketing."""
+    from openlmis_distributions_etl_spark.functions import prefix as P
     df = spark.range(5000).select(
         ((F.col("id") * 37) % 991).cast("double").alias("_k"))
-    monkeypatch.setattr(A, "PREFIX_TARGET_ROWS", 100)  # → nb = 50
-    for max_fences, label in ((1024, "single"), (8, "two-level")):
-        monkeypatch.setattr(A, "PREFIX_MAX_FENCES", max_fences)
-        out = A._rank_buckets(df, 5000).collect()
+    monkeypatch.setattr(P, "PREFIX_TARGET_ROWS", 100)  # → nb = 50
+    for probe, max_fences, label in _BUCKET_BRANCHES:
+        monkeypatch.setattr(P, "PROBE_FENCES", probe)
+        monkeypatch.setattr(P, "PREFIX_MAX_FENCES", max_fences)
+        calls = _spy_collect_fences(monkeypatch, P)
+        out = P.rank_buckets(df).collect()
+        assert calls == {"probe": [], "exact": [50],
+                         "two-level": [5]}[label], label
         per = {}
         for r in out:
             per.setdefault(r["bkt"], set()).add(r["_k"])
@@ -1147,26 +1173,33 @@ def test_rank_buckets_data_proportional_and_two_level(spark, monkeypatch):
 
 
 def test_global_row_index_exact_under_two_level_buckets(spark, monkeypatch):
-    """End-to-end pin: the two-level recursion path still assigns the
-    EXACT contiguous ids (fence placement only affects balance)."""
+    """End-to-end pin: the exact-resolution and two-level bucketer
+    branches still assign the EXACT contiguous ids (fence placement
+    only affects balance). sf0.001 has 500 documents, so a 20-row
+    target sizes nb = 25 buckets."""
+    from openlmis_distributions_etl_spark.functions import prefix as P
     from openlmis_distributions_etl_spark.operators import analytics as A
     from openlmis_distributions_etl_spark.sources import load_tables
-    monkeypatch.setattr(A, "PREFIX_TARGET_ROWS", 20)
-    monkeypatch.setattr(A, "PREFIX_MAX_FENCES", 5)
+    monkeypatch.setattr(P, "PREFIX_TARGET_ROWS", 20)
     t = load_tables(spark, SF0001)
-    got = {r["doc_id"]: r["row_index"]
-           for r in A.global_row_index(t).collect()}
     want = sorted(((-r["n_chars"], r["doc_id"]) for r in
                    t["documents"].select("doc_id", "n_chars").collect()))
-    assert got == {doc: i for i, (_, doc) in enumerate(want)}
+    for probe, max_fences, label in _BUCKET_BRANCHES[1:]:
+        monkeypatch.setattr(P, "PROBE_FENCES", probe)
+        monkeypatch.setattr(P, "PREFIX_MAX_FENCES", max_fences)
+        calls = _spy_collect_fences(monkeypatch, P)
+        got = {r["doc_id"]: r["row_index"]
+               for r in A.global_row_index(t).collect()}
+        assert calls == {"exact": [25], "two-level": [5]}[label], label
+        assert got == {doc: i for i, (_, doc) in enumerate(want)}, label
 
 
 def test_grouped_rank_min_two_level_exact(spark, monkeypatch):
     """The GROUPED prefix-sum ECDF must recurse past PREFIX_MAX_FENCES
-    like _rank_buckets: one giant group no longer collapses onto the
+    like rank_buckets: one giant group no longer collapses onto the
     per-group fence ceiling, and rank selection stays EXACT under the
     two-level split (fence placement only affects balance)."""
-    from openlmis_distributions_etl_spark.operators import analytics as A
+    from openlmis_distributions_etl_spark.functions import prefix as P
     rows, vals = [], {}
     # group a: 900 distinct values; group b: 400 values over 97
     # distinct (exercises the c > 1 multiplicity path)
@@ -1181,10 +1214,10 @@ def test_grouped_rank_min_two_level_exact(spark, monkeypatch):
     targets = {"med": "(n + 1) DIV 2", "p90": "(9 * n + 9) DIV 10"}
     for target_rows, max_fences, label in (
             (1_000_000, 1024, "single"), (25, 6, "two-level")):
-        monkeypatch.setattr(A, "PREFIX_TARGET_ROWS", target_rows)
-        monkeypatch.setattr(A, "PREFIX_MAX_FENCES", max_fences)
+        monkeypatch.setattr(P, "PREFIX_TARGET_ROWS", target_rows)
+        monkeypatch.setattr(P, "PREFIX_MAX_FENCES", max_fences)
         got = {r["event_type"]: r for r in
-               A._grouped_rank_min(pts, targets).collect()}
+               P._grouped_rank_min(pts, targets).collect()}
         for g, vs in vals.items():
             n = len(vs)
             assert got[g]["n_rows"] == n, label
@@ -1196,12 +1229,13 @@ def test_value_deciles_two_level_matches_single(spark, monkeypatch):
     """End-to-end pin: value_deciles_by_type (now on the shared
     grouped helper) returns identical deciles under the two-level
     fence split as under the parity-pinned single-level path."""
+    from openlmis_distributions_etl_spark.functions import prefix as P
     from openlmis_distributions_etl_spark.operators import analytics as A
     from openlmis_distributions_etl_spark.sources import load_tables
     t = load_tables(spark, SF0001)
     want = sorted(tuple(r) for r in A.value_deciles_by_type(t).collect())
-    monkeypatch.setattr(A, "PREFIX_TARGET_ROWS", 50)
-    monkeypatch.setattr(A, "PREFIX_MAX_FENCES", 7)
+    monkeypatch.setattr(P, "PREFIX_TARGET_ROWS", 50)
+    monkeypatch.setattr(P, "PREFIX_MAX_FENCES", 7)
     got = sorted(tuple(r) for r in A.value_deciles_by_type(t).collect())
     assert got == want
 

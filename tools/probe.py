@@ -29,7 +29,7 @@ def main() -> None:
     ap.add_argument("--sf", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--cpus", type=int, default=int(os.environ.get(
-        "SPARK_GRAFT_CPUS", "32")))
+        "SPARK_GRAFT_CPUS", os.cpu_count())))
     ap.add_argument("--conf", action="append", default=[],
                     help="extra k=v session conf (repeatable)")
     args = ap.parse_args()
